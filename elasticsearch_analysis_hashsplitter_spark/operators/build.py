@@ -53,7 +53,7 @@ def run_jobs_concurrently(*thunks):
     back-fill executors freed by the earlier job's tail). Callers must
     only pass thunks whose jobs are independent — no thunk may read
     files another thunk writes. Returns the thunk results in order;
-    the first exception propagates after all threads finish."""
+    on failure see :func:`run_jobs_pool`."""
     return run_jobs_pool(thunks, max_workers=len(thunks))
 
 
@@ -61,18 +61,27 @@ def run_jobs_pool(thunks, max_workers: int = 4):
     """:func:`run_jobs_concurrently` over a list, with a bounded pool —
     for fan-outs whose width follows the data (one thunk per victim
     slice): a few jobs in flight is enough to fill scheduler gaps
-    without flooding the cluster (guide §2.6)."""
+    without flooding the cluster (guide §2.6).
+
+    The first failure (in completion order) cancels every thunk that
+    has not started yet — their output would be discarded with the
+    failed operation's — waits for the running ones to finish, and is
+    re-raised."""
     thunks = list(thunks)
     if not thunks:
         return []
     if len(thunks) == 1:
         return [thunks[0]()]
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor, as_completed
 
     with ThreadPoolExecutor(
         max_workers=min(max_workers, len(thunks))
     ) as pool:
         futures = [pool.submit(t) for t in thunks]
+        for f in as_completed(futures):
+            if f.exception() is not None:
+                pool.shutdown(cancel_futures=True)
+                raise f.exception()
         return [f.result() for f in futures]
 
 

@@ -16,6 +16,9 @@ Spark-first physical strategy (SURVEY.md §3.2 "Spark equivalent"):
   a conjunctive candidate must appear in the rarest term's postings).
   Final top-k is ORDER BY score DESC, doc_id ASC LIMIT k, which Spark
   executes as per-partition top-k + driver merge (TakeOrderedAndProject).
+* Selective BM25 queries (few total postings) skip all of that: one
+  JVM-only scan brings their blocks to the driver, where numpy scores
+  and ranks them (``_DRIVER_SCORE_CUTOFF``, :meth:`SearchEngine.bm25_scores`).
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from urllib.parse import unquote
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,6 +64,13 @@ _SCORE_SCHEMA = T.StructType(
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("term_idx", T.IntegerType(), False),
         T.StructField("contrib", T.DoubleType(), False),
+    ]
+)
+
+_SCORED_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("score", T.DoubleType(), False),
     ]
 )
 
@@ -233,6 +244,127 @@ def _live_mask(ids: np.ndarray, deleted: np.ndarray) -> np.ndarray:
     liveDocs bitset test, applied to decoded posting arrays."""
     pos = np.minimum(np.searchsorted(deleted, ids), deleted.size - 1)
     return deleted[pos] != ids
+
+
+#: execution-site switch for :meth:`SearchEngine.bm25_scores`: a query
+#: whose distinct terms hold at most this many postings in total
+#: (``sum(df)``, free from the cached term stats) is scored on the
+#: driver — one JVM-only scan collects its blocks, numpy decodes,
+#: scores and aggregates them — instead of the ``mapInPandas`` kernel
+#: plus a ``groupBy`` shuffle. On a 4-CPU box any stage that runs a
+#: Python worker costs ~250-300 ms even as a no-op, which dominates a
+#: selective query. Measured crossover (4-CPU box, local[4], 100k-file
+#: ``generate_corpus`` index, warm ``bm25_topk(k=10)``, median of 5
+#: interleaved calls per point, driver vs distributed ms):
+#: disjunctive 99k postings 187 vs 675, 0.95M 635 vs 979, 2.0M 642 vs
+#: 934, 2.9M 913 vs 1108, 3.9M 1260 vs 1555, 4.7M 1656 vs 1369;
+#: rare-AND-hot conjunctive 0.2M 505 vs 2054, 2.0M 690 vs 982, 2.9M
+#: 930 vs 1180, 3.9M 1318 vs 1145. The sites cross between ~3M and
+#: ~4.5M postings; the cutoff sits below that, so host noise cannot
+#: flip a query onto the slower site. Not a user option: the engine
+#: picks the site from the index and the terms alone.
+_DRIVER_SCORE_CUTOFF = 2_000_000
+
+
+def _bm25_block_contribs(
+    terms,
+    dblobs,
+    tblobs,
+    lblobs,
+    params: dict,
+    k1: float,
+    b: float,
+    avgdl: float,
+    cand_ids: np.ndarray | None = None,
+    exempt=(),
+):
+    """Decode posting blocks into per-posting BM25 contributions —
+    ``w_idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))``,
+    the ONE evaluation of the formula shared by the single-query
+    ``mapInPandas`` kernels and the driver-side scorer (their scores
+    agree bit for bit per posting).
+
+    ``params``: term -> (w_idf, term_idx). ``cand_ids`` (sorted): the
+    postings of every term NOT in ``exempt`` are filtered to that
+    candidate doc set. Returns (doc_id int64, term_idx int32, contrib
+    float64) arrays in block order, or None when no posting survives."""
+    docs_l, idx_l, contrib_l = [], [], []
+    for term, dblob, tblob, lblob in zip(terms, dblobs, tblobs, lblobs):
+        w_idf, t_idx = params[term]
+        d = decode_doc_ids(dblob)
+        sel = None
+        if cand_ids is not None and term not in exempt:
+            if cand_ids.size == 0:
+                continue
+            pos = np.minimum(np.searchsorted(cand_ids, d), cand_ids.size - 1)
+            sel = cand_ids[pos] == d
+            if not sel.any():
+                continue
+            d = d[sel]
+        tf = decode_counts(tblob).astype(np.float64)
+        dl = decode_counts(lblob).astype(np.float64)
+        if sel is not None:
+            tf = tf[sel]
+            dl = dl[sel]
+        docs_l.append(d)
+        idx_l.append(np.full(d.size, t_idx, dtype=np.int32))
+        contrib_l.append(
+            w_idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+        )
+    if not docs_l:
+        return None
+    return (
+        np.concatenate(docs_l),
+        np.concatenate(idx_l),
+        np.concatenate(contrib_l),
+    )
+
+
+def _score_blocks_frame(blocks: DataFrame, **kw) -> DataFrame:
+    """The distributed execution site: :func:`_bm25_block_contribs` as
+    an Arrow-batched ``mapInPandas`` kernel over ``blocks`` ->
+    (doc_id, term_idx, contrib) rows. ``kw`` is passed through."""
+
+    def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = _bm25_block_contribs(
+                pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"], **kw
+            )
+            if out is not None:
+                yield pd.DataFrame(
+                    {"doc_id": out[0], "term_idx": out[1], "contrib": out[2]}
+                )
+
+    return blocks.select("term", "docs", "tfs", "dls").mapInPandas(
+        score_fn, schema=_SCORE_SCHEMA
+    )
+
+
+def _scored_frame(
+    spark: SparkSession, ids: np.ndarray, scores: np.ndarray
+) -> DataFrame:
+    """(doc_id, score) arrays -> a LocalRelation DataFrame, shipped to
+    the JVM as Arrow: no Python worker, and collecting it (or a
+    filter / limit of it) submits no job. Rows keep the array order."""
+    return spark.createDataFrame(
+        pa.table({"doc_id": ids, "score": scores}), schema=_SCORED_SCHEMA
+    )
+
+
+def _topk_arrays(
+    ids: np.ndarray, scores: np.ndarray, k: int, after: tuple | None
+) -> tuple[np.ndarray, np.ndarray]:
+    """numpy twin of :meth:`SearchEngine.bm25_topk`'s DataFrame tail:
+    the ``search_after`` cursor predicate, then the first ``k`` hits in
+    (score desc, doc_id asc) order."""
+    if after is not None:
+        s, d = float(after[0]), int(after[1])
+        keep = (scores < s) | ((scores == s) & (ids > d))
+        ids, scores = ids[keep], scores[keep]
+    order = np.lexsort((ids, -scores))[:k]
+    return ids[order], scores[order]
 
 
 def _decode_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2812,14 +2944,8 @@ class SearchEngine:
     # BM25 scored path
     # ------------------------------------------------------------------
     def _empty_scored(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("doc_id", T.LongType(), False),
-                    T.StructField("score", T.DoubleType(), False),
-                ]
-            ),
+        return _scored_frame(
+            self.spark, np.empty(0, dtype=np.int64), np.empty(0)
         )
 
     def bm25_topk_disjunctive(self, terms: list[str], k: int = 10) -> DataFrame:
@@ -2884,6 +3010,10 @@ class SearchEngine:
             len(present) == 1
             or min_df > 0.5 * n_docs
             or sum_df <= self.disjunctive_exhaustive_cutoff
+            # the driver site scores the whole disjunction in one pass;
+            # a bootstrap there would decode every list and then the
+            # rescoring stage would decode them again
+            or sum_df <= _DRIVER_SCORE_CUTOFF
         ):
             # Every term is dense: nearly every doc is a candidate, theta
             # lands near the global k-th score, and neither the MaxScore
@@ -2972,9 +3102,21 @@ class SearchEngine:
         blocks = self._block_max_prune(
             blocks, present, weights, info, ub, theta, n_docs
         )
-        scored = self._score_blocks(
-            blocks, weights, info, n_docs,
-            cand_ids=cand_ids, cand_terms=cand_terms,
+        # postings of terms outside cand_terms are filtered to the
+        # candidate set before the shuffle — sound because the is_cand
+        # filter below discards non-candidate docs anyway, and it
+        # shrinks the shuffle from O(df_hot) to O(|candidates|)
+        scored = _score_blocks_frame(
+            blocks,
+            params={
+                t: (weights[t] * idf(t), i)
+                for i, t in enumerate(distinct)
+            },
+            k1=k1,
+            b=b,
+            avgdl=avgdl,
+            cand_ids=cand_ids,
+            exempt=cand_terms,
         )
         # candidates must touch an essential or strongest term (docs only
         # in non-essential terms are pruned by the theta bound)
@@ -3071,80 +3213,6 @@ class SearchEngine:
             block_ub + rest_map[F.col("term")] >= F.lit(float(theta))
         )
 
-    def _score_blocks(
-        self, blocks, weights, info, n_docs,
-        cand_ids: np.ndarray | None = None,
-        cand_terms: set | None = None,
-    ) -> DataFrame:
-        """Decode + per-posting BM25 contributions for the given blocks.
-
-        ``cand_ids`` (sorted) with ``cand_terms``: postings of terms
-        OUTSIDE ``cand_terms`` are filtered to the candidate doc set
-        before being emitted — sound whenever the caller discards
-        non-candidate docs after aggregation anyway (the disjunctive
-        is_cand filter), and it shrinks the shuffle from O(df_hot) to
-        O(|candidates|) per hot term."""
-        k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
-        avgdl = self.stats["avgdl"] or 1.0
-        distinct = sorted(set(weights))
-        params = {
-            t: (
-                weights[t] * _bm25_idf(n_docs, info.get(t, (0, 0))[0]),
-                i,
-            )
-            for i, t in enumerate(distinct)
-        }
-
-        def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                docs_l, idx_l, contrib_l = [], [], []
-                for term, dblob, tblob, lblob in zip(
-                    pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"]
-                ):
-                    w_idf, t_idx = params[term]
-                    d = decode_doc_ids(dblob)
-                    sel = None
-                    if (
-                        cand_ids is not None
-                        and term not in cand_terms
-                    ):
-                        if cand_ids.size == 0:
-                            continue
-                        pos = np.minimum(
-                            np.searchsorted(cand_ids, d),
-                            cand_ids.size - 1,
-                        )
-                        sel = cand_ids[pos] == d
-                        if not sel.any():
-                            continue
-                        d = d[sel]
-                    tf = decode_counts(tblob).astype(np.float64)
-                    dl = decode_counts(lblob).astype(np.float64)
-                    if sel is not None:
-                        tf = tf[sel]
-                        dl = dl[sel]
-                    c = w_idf * tf * (k1 + 1.0) / (
-                        tf + k1 * (1.0 - b + b * dl / avgdl)
-                    )
-                    docs_l.append(d)
-                    idx_l.append(np.full(d.size, t_idx, dtype=np.int32))
-                    contrib_l.append(c)
-                if not docs_l:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(docs_l),
-                        "term_idx": np.concatenate(idx_l),
-                        "contrib": np.concatenate(contrib_l),
-                    }
-                )
-
-        return blocks.select("term", "docs", "tfs", "dls").mapInPandas(
-            score_fn, schema=_SCORE_SCHEMA
-        )
-
     def bm25_topk(
         self,
         terms: list[str],
@@ -3191,7 +3259,7 @@ class SearchEngine:
         analyzed value are always distinct thanks to the position
         prefix, so distinct-term counting is clause counting).
         """
-        scores = self.bm25_scores(
+        scores = self._scores(
             terms,
             conjunctive,
             boost,
@@ -3199,6 +3267,15 @@ class SearchEngine:
             global_stats=global_stats,
             min_should_match=min_should_match,
         )
+        if not isinstance(scores, DataFrame):
+            if must_not is None and filter is None:
+                # driver site: cursor + top-k in numpy; the k-row frame
+                # is a LocalRelation already in rank order, so the
+                # caller's collect submits no job at all
+                return _scored_frame(self.spark, *_topk_arrays(
+                    *scores, k, after
+                ))
+            scores = _scored_frame(self.spark, *scores)
         if must_not is not None:
             ex = ir.simplify(must_not)
             if not isinstance(ex, ir.MatchNone):
@@ -3253,7 +3330,47 @@ class SearchEngine:
         structural — conjunctive-membership checks, anchor selection,
         block pruning — keeps using this index's own stats, exactly as
         a Lucene shard executes a dfs-phase query: global weights,
-        local postings."""
+        local postings.
+
+        Two execution sites, chosen by a pure function of the index and
+        the query terms — the total postings of the distinct terms,
+        ``sum(df)`` from the cached term stats:
+
+        * at most ``_DRIVER_SCORE_CUTOFF``: the driver site
+          (:meth:`_driver_scores`) — one JVM-only scan, numpy decode,
+          score and aggregate; no Python worker, no shuffle;
+        * above it: the distributed site — the ``mapInPandas`` kernel
+          with the anchor-id / block-range prunes and a ``groupBy``
+          shuffle.
+
+        Both evaluate each posting's contribution with the same
+        :func:`_bm25_block_contribs`. The canonical score of a doc is
+        the sequential sum of its contributions in ascending term
+        order, which the driver site computes exactly; the distributed
+        site's shuffle sums in arrival order and may differ in the last
+        ulp. Because the site is fixed per (index, terms), repeated
+        calls and ``search_after`` pages stay bit-stable."""
+        out = self._scores(
+            terms, conjunctive, boost, _anchor, global_stats,
+            min_should_match,
+        )
+        if isinstance(out, DataFrame):
+            return out
+        return _scored_frame(self.spark, *out)
+
+    def _scores(
+        self,
+        terms: list[str],
+        conjunctive: bool,
+        boost: float,
+        _anchor: str | None,
+        global_stats: dict | None,
+        min_should_match: int,
+    ):
+        """:meth:`bm25_scores` body: a (doc_id, score) DataFrame from
+        the distributed site, or (doc_ids, scores) numpy arrays from
+        the driver site — so :meth:`bm25_topk` can rank those without
+        a Spark job."""
         if min_should_match > 1 and conjunctive:
             raise ValueError(
                 "min_should_match applies to disjunctive scoring only"
@@ -3283,6 +3400,24 @@ class SearchEngine:
             )
             for i, t in enumerate(distinct)
         }
+
+        need_msm = (not conjunctive) and min_should_match > 1
+        if need_msm and min_should_match > len(distinct):
+            return self._empty_scored()  # unsatisfiable n-of-m
+        need_membership = (
+            (conjunctive and len(distinct) > 1)
+            or (_anchor is not None)
+            or need_msm
+        )
+        if sum(dfs.values()) <= _DRIVER_SCORE_CUTOFF:
+            return self._driver_scores(
+                distinct,
+                params,
+                avgdl,
+                require_all=conjunctive and len(distinct) > 1,
+                min_should_match=min_should_match if need_msm else 0,
+                anchor_idx=None if _anchor is None else params[_anchor][1],
+            )
 
         blocks = self.postings.where(F.col("term").isin(distinct))
         anchor = _anchor
@@ -3322,58 +3457,14 @@ class SearchEngine:
                     (F.col("term") == anchor) | overlap
                 )
 
-        k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
-        anchor_term = anchor
-
-        def score_blocks(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                docs_l, idx_l, contrib_l = [], [], []
-                for term, dblob, tblob, lblob in zip(
-                    pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"]
-                ):
-                    w_idf, t_idx = params[term]
-                    d = decode_doc_ids(dblob)
-                    sel = None
-                    if anchor_ids is not None and term != anchor_term:
-                        # posting-level candidate filter: only docs that
-                        # contain the anchor can satisfy the query
-                        if anchor_ids.size == 0:
-                            continue
-                        pos = np.minimum(
-                            np.searchsorted(anchor_ids, d),
-                            anchor_ids.size - 1,
-                        )
-                        sel = anchor_ids[pos] == d
-                        if not sel.any():
-                            continue
-                        d = d[sel]
-                    tf = decode_counts(tblob).astype(np.float64)
-                    dl = decode_counts(lblob).astype(np.float64)
-                    if sel is not None:
-                        tf = tf[sel]
-                        dl = dl[sel]
-                    c = w_idf * tf * (k1 + 1.0) / (
-                        tf + k1 * (1.0 - b + b * dl / avgdl)
-                    )
-                    docs_l.append(d)
-                    idx_l.append(np.full(d.size, t_idx, dtype=np.int32))
-                    contrib_l.append(c)
-                if not docs_l:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(docs_l),
-                        "term_idx": np.concatenate(idx_l),
-                        "contrib": np.concatenate(contrib_l),
-                    }
-                )
-
-        scored = blocks.select("term", "docs", "tfs", "dls").mapInPandas(
-            score_blocks, schema=_SCORE_SCHEMA
+        scored = _score_blocks_frame(
+            blocks,
+            params=params,
+            k1=self.cfg.bm25_k1,
+            b=self.cfg.bm25_b,
+            avgdl=avgdl,
+            cand_ids=anchor_ids,
+            exempt=(anchor,),
         )
         # Term-membership via a bit_or bitmask over the (local, dense)
         # term_idx instead of countDistinct: a distinct-aggregate
@@ -3383,14 +3474,6 @@ class SearchEngine:
         # anchor test reads the same mask. Duplicate-safe (a re-ingested
         # doc's repeated term sets the same bit). Fallback to
         # countDistinct only past 63 distinct terms (a > 252-char value).
-        need_msm = (not conjunctive) and min_should_match > 1
-        if need_msm and min_should_match > len(distinct):
-            return self._empty_scored()  # unsatisfiable n-of-m
-        need_membership = (
-            (conjunctive and len(distinct) > 1)
-            or (_anchor is not None)
-            or need_msm
-        )
         aggs = [F.sum("contrib").alias("score")]
         use_mask = need_membership and len(distinct) <= 63
         if use_mask:
@@ -3438,6 +3521,62 @@ class SearchEngine:
         # through here too, so its theta is the k-th LIVE score — lower
         # than a stale theta, hence still a sound prune threshold.
         return self._filter_live(agg.select("doc_id", "score"))
+
+    def _driver_scores(
+        self,
+        distinct: list[str],
+        params: dict,
+        avgdl: float,
+        require_all: bool,
+        min_should_match: int,
+        anchor_idx: int | None,
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """The driver execution site of :meth:`bm25_scores`: one
+        JVM-only scan (no Python worker, no exchange) brings the query
+        terms' posting blocks to the driver as Arrow, and numpy mirrors
+        the distributed ``groupBy``: per-doc score sums, the distinct-
+        term membership filters (all terms / at least
+        ``min_should_match`` / must hold term ``anchor_idx``) and the
+        tombstone mask. Each doc's contributions are summed
+        sequentially in ascending term order (``np.bincount`` over the
+        term-sorted postings). -> (doc_ids, scores), doc_id ascending."""
+        tbl = (
+            self.postings.where(F.col("term").isin(distinct))
+            .select("term", "docs", "tfs", "dls")
+            .toArrow()
+        )
+        out = _bm25_block_contribs(
+            tbl.column("term").to_pylist(),
+            tbl.column("docs").to_pylist(),
+            tbl.column("tfs").to_pylist(),
+            tbl.column("dls").to_pylist(),
+            params=params,
+            k1=self.cfg.bm25_k1,
+            b=self.cfg.bm25_b,
+            avgdl=avgdl,
+        )
+        if out is None:
+            return np.empty(0, dtype=np.int64), np.empty(0)
+        doc, t_idx, contrib = out
+        ids, inv = np.unique(doc, return_inverse=True)
+        order = np.argsort(t_idx, kind="stable")
+        score = np.bincount(inv[order], weights=contrib[order],
+                            minlength=ids.size)
+        keep = np.ones(ids.size, dtype=bool)
+        if require_all or min_should_match:
+            n = len(distinct)
+            pairs = np.unique(inv.astype(np.int64) * n + t_idx)
+            n_terms = np.bincount(pairs // n, minlength=ids.size)
+            if require_all:
+                keep &= n_terms == n
+            if min_should_match:
+                keep &= n_terms >= min_should_match
+        if anchor_idx is not None:
+            keep &= np.bincount(inv[t_idx == anchor_idx],
+                                minlength=ids.size) > 0
+        if self._deleted is not None:
+            keep &= _live_mask(ids, self._deleted)
+        return ids[keep], score[keep]
 
 
 class ServeCoalescer:

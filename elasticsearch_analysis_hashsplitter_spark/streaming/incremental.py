@@ -719,6 +719,13 @@ def upsert_docs(
     through a refresh anyway. (:func:`update_by_query` materializes its
     own update frame for exactly this reason.)
 
+    ``docs_df`` must NOT be derived from this index (no lineage that
+    reads ``index_dir``, e.g. a reindex over this index's own postings
+    or docstats): the batch's tokenize job runs concurrently with the
+    delete + purge, whose directory swap renames and removes the files
+    such a frame would still be reading. Materialize it first (collect,
+    or write it elsewhere) if it must come from the index.
+
     Returns ``{"upserted": total rows, "replaced": ids that existed,
     "stats": refreshed stats}``.
     """

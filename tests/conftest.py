@@ -23,3 +23,14 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def distributed_scoring(monkeypatch):
+    """Score every single query through the distributed ``mapInPandas``
+    kernel: suites that exercise its prune machinery (anchor-id filter,
+    block ranges, MaxScore bootstrap) would otherwise take the driver
+    site on their small corpora and never reach it."""
+    from elasticsearch_analysis_hashsplitter_spark.operators import search
+
+    monkeypatch.setattr(search, "_DRIVER_SCORE_CUTOFF", 0)

@@ -112,7 +112,9 @@ _NARROW_QS = {
 
 
 @pytest.mark.parametrize("conjunctive", [True, False])
-def test_batch_forced_prune_rank_identity(narrow_eng, conjunctive):
+def test_batch_forced_prune_rank_identity(
+    narrow_eng, distributed_scoring, conjunctive
+):
     eng = narrow_eng
     eng._block_ranges_cache.clear()
     pruned = bm25_topk_batch(
@@ -239,7 +241,9 @@ def test_anchor_theta_driver_rows_bounded(narrow_eng, spark):
     assert theta_small == theta_big
 
 
-def test_batch_random_query_shapes_match_single(narrow_eng):
+def test_batch_random_query_shapes_match_single(
+    narrow_eng, distributed_scoring
+):
     """Seeded-random query bags over the narrow-block fixture: every
     shape (rare/hot mixes, duplicates for weighting, absent terms,
     single-term, 1..4 terms) must match the single-query path doc-for-

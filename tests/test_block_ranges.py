@@ -148,7 +148,9 @@ def test_coarsen_intervals_kernel():
 @pytest.mark.parametrize(
     "query,k", [("zephyr data", 5), ("data code", 10), ("zephyr", 3)]
 )
-def test_tiny_caps_stay_exact(narrow, monkeypatch, cap, query, k):
+def test_tiny_caps_stay_exact(
+    narrow, monkeypatch, distributed_scoring, cap, query, k
+):
     eng, orc = narrow
     eng._block_ranges_cache.clear()  # ranges cached per engine; each
     # parametrized cap must collect its own coarsening

@@ -19,6 +19,10 @@ CFG = HashSplitterConfig(
     chunk_length=4, token_mode="tokens", apply_input_cap=False
 )
 
+# every test here exercises the MaxScore / block-max machinery, which
+# only the distributed scoring kernel runs
+pytestmark = pytest.mark.usefixtures("distributed_scoring")
+
 RNG = np.random.RandomState(99)
 COMMON = ["data", "code", "line", "file"]
 RARE = ["zephyr", "quixotic"]

@@ -236,3 +236,50 @@ def test_run_jobs_concurrently_order_and_errors():
         run_jobs_concurrently(lambda: 1, boom)
     with _pytest.raises(ValueError, match="sink failed"):
         run_jobs_pool([boom, lambda: 2], max_workers=2)
+
+
+def test_run_jobs_pool_cancels_queued_thunks_on_failure():
+    """A failed thunk stops the thunks still queued behind it (their
+    output would be discarded with the failed operation), re-raises,
+    and a successful fan-out returns results in thunk order even when
+    they complete out of order. Pure Python, no Spark."""
+    import threading
+    import time
+
+    import pytest as _pytest
+
+    from elasticsearch_analysis_hashsplitter_spark.operators.build import (
+        run_jobs_pool,
+    )
+
+    ran = []
+    lock = threading.Lock()
+
+    def boom():
+        raise ValueError("victim rewrite failed")
+
+    def queued(i):
+        def thunk():
+            with lock:
+                ran.append(i)
+            time.sleep(0.2)  # long enough for the cancel to land
+            return i
+
+        return thunk
+
+    with _pytest.raises(ValueError, match="victim rewrite failed"):
+        run_jobs_pool([boom] + [queued(i) for i in range(8)], max_workers=1)
+    # one worker: at most the thunk it picked up right after the failure
+    # can have started; the other seven were cancelled
+    assert len(ran) <= 1, ran
+
+    def slow(i):
+        def thunk():
+            time.sleep(0.02 * (6 - i))  # later thunks finish first
+            return i * 10
+
+        return thunk
+
+    assert run_jobs_pool([slow(i) for i in range(6)], max_workers=3) == [
+        i * 10 for i in range(6)
+    ]

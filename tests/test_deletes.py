@@ -95,7 +95,7 @@ def test_scores_stale_and_ranks_promote(spark):
         assert gs == pytest.approx(es, rel=0, abs=0)  # bit-identical
 
 
-def test_disjunctive_prune_sound_under_deletes(spark):
+def test_disjunctive_prune_sound_under_deletes(spark, distributed_scoring):
     """Force the MaxScore machinery (cutoff 0) and check the pruned
     disjunctive top-k is rank-identical to the exhaustive single-pass
     OR after deletes — i.e. theta bootstrapped from LIVE docs only."""
@@ -116,7 +116,9 @@ def test_disjunctive_prune_sound_under_deletes(spark):
 
 
 @pytest.mark.parametrize("conjunctive", [True, False])
-def test_batch_paths_match_single_under_deletes(spark, conjunctive):
+def test_batch_paths_match_single_under_deletes(
+    spark, distributed_scoring, conjunctive
+):
     eng = _engine(spark)
     eng.delete_docs(_ids(eng.term("join"))[:4])
     # force every prune tier so the masks run through the kernels

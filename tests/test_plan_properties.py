@@ -57,7 +57,9 @@ def test_prefix_pushes_startswith(disk_engine):
     assert "StringStartsWith(term," in plan
 
 
-def test_topk_is_take_ordered(disk_engine):
+def test_topk_is_take_ordered(disk_engine, distributed_scoring):
+    # the distributed scoring site's top-k; the driver site ranks in
+    # numpy and returns a LocalTableScan (tests/test_driver_scoring.py)
     plan = _plan(disk_engine.search("spark", k=5))
     assert "TakeOrderedAndProject" in plan
 

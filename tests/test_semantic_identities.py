@@ -15,7 +15,7 @@ reference's own fixtures.
 """
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from elasticsearch_analysis_hashsplitter_spark.config import (
@@ -75,19 +75,36 @@ def test_prefix_identity(vals, data):
     assert got == exp, (vals, probe)
 
 
-@given(corpus(), st.data())
+@given(
+    vals=corpus(),
+    pick=st.integers(0, 24),
+    mask=st.lists(st.booleans(), min_size=16, max_size=16),
+)
+# the all-wildcard probe runs on every run, not only once a random draw
+# has found it and the example database replays it
+@example(
+    vals=["0123456789abcdef", "0123456789abcdee", "fedcba9876543210"],
+    pick=0,
+    mask=[True] * 16,
+)
 @settings(max_examples=120, deadline=None)
-def test_wildcard_mask_identity(vals, data):
+def test_wildcard_mask_identity(vals, pick, mask):
     idx = OracleIndex(dict(enumerate(vals)), CFG)
-    src = data.draw(st.sampled_from(vals))
-    mask = data.draw(st.lists(st.booleans(), min_size=16, max_size=16))
+    src = vals[pick % len(vals)]
     probe = "".join("?" if m else c for c, m in zip(src, mask))
     got = idx.docs(qc.wildcard_query(probe, CFG))
-    exp = {
-        i
-        for i, v in enumerate(vals)
-        if all(p == "?" or p == c for p, c in zip(probe, v))
-    }
+    # A probe without one literal character yields no chunk clause
+    # (search_chunks drops all-'?' chunks), and the reference's C7
+    # BooleanQuery with zero MUST clauses matches nothing
+    # (HashSplitterFieldMapper.java:748-770), so it matches no doc.
+    if set(probe) == {"?"}:
+        exp = set()
+    else:
+        exp = {
+            i
+            for i, v in enumerate(vals)
+            if all(p == "?" or p == c for p, c in zip(probe, v))
+        }
     assert got == exp, (vals, probe)
 
 
